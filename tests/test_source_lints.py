@@ -318,3 +318,33 @@ def test_every_raw_broadcast_hint_is_adjudicated_bounded():
         "(round-10 verdict, unigram_logprob_score class):\n"
         + "\n".join(problems)
     )
+
+
+# ---------------------------------------------------------------------------
+# Lint #3: the exactly-once foreachBatch protocol (stream runner + dynamic
+# partition overwrite) has ONE home, streaming/standing_store.py.  Two
+# hand-written copies drifted before (a restart-skip hardening reached one
+# gate only); a new sink must call the shared module, not fork it.
+_PROTOCOL_HOME = "streaming/standing_store.py"
+_PROTOCOL_MARKERS = re.compile(r"foreachBatch\s*\(|partitionOverwriteMode")
+
+
+def test_foreach_batch_protocol_lives_in_one_module():
+    home_hits: set[str] = set()
+    offenders: list[str] = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            for m in _PROTOCOL_MARKERS.finditer(line):
+                if rel == _PROTOCOL_HOME:
+                    home_hits.add(m.group(0).split("(")[0].strip())
+                else:
+                    offenders.append(f"{rel}:{lineno}: {line.strip()}")
+    assert home_hits == {"foreachBatch", "partitionOverwriteMode"}, (
+        f"{_PROTOCOL_HOME} no longer holds the protocol: {home_hits}"
+    )
+    assert not offenders, (
+        "foreachBatch / partitionOverwriteMode outside "
+        f"{_PROTOCOL_HOME} -- call its run_stream / write_batch instead:\n"
+        + "\n".join(offenders)
+    )

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.streaming.ingest_dedup import (
+    apply_ingest_batch,
     init_standing_stores,
     stream_ingest_with_dedup,
 )
@@ -254,24 +255,54 @@ def test_gate_markers_are_per_gate(spark, tmp_path):
     assert os.path.isdir(os.path.join(store, "digests"))
 
 
-def test_reinit_rebuilds_when_store_lost_despite_marker(spark, stores):
-    """Round-11 hardening: a matching _corpus_id marker must NOT make
-    init a no-op when a store subdir was deleted or lost -- the skip
-    requires all three stores to be readable, else the gate would fail
-    later reading the missing store."""
+def _line_gate():
+    from wsu_cpts_415_spark.streaming.line_gate import (
+        apply_line_gate_batch,
+        init_line_store,
+    )
+
+    return init_line_store, apply_line_gate_batch
+
+
+# gate -> (init/apply loader, lost store, corpus, batch: (corpus dup, novel))
+REINIT_CASES = {
+    "dedup": (
+        lambda: (init_standing_stores, apply_ingest_batch),
+        "bands",
+        [(1, "alpha beta alpha beta")],
+        [(10, "alpha beta alpha beta alpha"), (11, "gamma delta gamma delta")],
+    ),
+    "lines": (
+        _line_gate,
+        "line_counts",
+        [(1, "alpha beta"), (2, "alpha beta"), (3, "alpha beta")],
+        [(40, "alpha beta"), (41, "epsilon zeta epsilon zeta")],
+    ),
+}
+
+
+@pytest.mark.parametrize("gate", sorted(REINIT_CASES))
+def test_reinit_rebuilds_when_store_lost_despite_marker(spark, tmp_path, gate):
+    """Round-11 hardening, for BOTH gates: a matching _corpus_id marker
+    must NOT make init a no-op when a store subdir was deleted or lost
+    -- the skip requires every store to be readable, else the gate
+    silently gates against an empty corpus (the line gate admitted its
+    all-boilerplate doc 40) or fails reading the missing store."""
     import shutil
 
-    shutil.rmtree(f"{stores['store']}/bands")
-    corpus = spark.createDataFrame([(1, "alpha beta alpha beta")], SCHEMA)
-    init_standing_stores(spark, corpus, stores["store"])  # must rebuild
-    ids = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{stores['store']}/bands")
-        .select("doc_id")
-        .distinct()
-        .collect()
-    )
-    assert ids == [1]
+    load, lost, corpus_rows, batch_rows = REINIT_CASES[gate]
+    init, apply_batch = load()
+    store = str(tmp_path / "store")
+    accepted = str(tmp_path / "accepted")
+    corpus = spark.createDataFrame(corpus_rows, SCHEMA)
+    init(spark, corpus, store)
+    shutil.rmtree(f"{store}/{lost}")
+    init(spark, corpus, store)  # must rebuild
+    rebuilt = spark.read.parquet(f"{store}/{lost}")
+    assert rebuilt.filter(F.col("_batch") == -1).count() > 0
+    # the rebuilt store gates: the corpus near-dup is rejected
+    apply_batch(spark.createDataFrame(batch_rows, SCHEMA), 0, store, accepted)
+    assert _accepted_ids(spark, accepted) == [batch_rows[1][0]]
 
 
 def test_reinit_survives_corrupt_marker(spark, stores):
@@ -292,3 +323,40 @@ def test_reinit_survives_corrupt_marker(spark, stores):
         .collect()
     )
     assert ids == [1]
+
+
+@pytest.mark.parametrize("gate, want", [("dedup", [11]), ("lines", [10])])
+def test_cli_ingest_stream_dispatches_by_gate(
+    spark, tmp_path, monkeypatch, gate, want
+):
+    """``ingest-stream --gate`` picks the gate's (init, run, default
+    threshold) from the CLI's gate table.  BATCH1 separates the gates:
+    the dedup gate admits only 11 (10 near-dups the corpus, 12 copies
+    11); the line gate admits only 10 (one novel line each, while 11
+    and 12 share theirs)."""
+    import wsu_cpts_415_spark.session as session
+    from wsu_cpts_415_spark.__main__ import main
+
+    # reuse the test session as-is: the CLI's own get_spark would
+    # re-apply the default conf to the shared session
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    corpus = str(tmp_path / "corpus")
+    incoming = str(tmp_path / "incoming")
+    accepted = str(tmp_path / "accepted")
+    _write(spark, [(1, "alpha beta alpha beta")], corpus)
+    _write(spark, BATCH1, incoming)
+    rc = main(
+        [
+            "ingest-stream",
+            incoming,
+            str(tmp_path / "store"),
+            accepted,
+            str(tmp_path / "ckpt"),
+            "--init-corpus",
+            corpus,
+            "--gate",
+            gate,
+        ]
+    )
+    assert rc == 0
+    assert _accepted_ids(spark, accepted) == want

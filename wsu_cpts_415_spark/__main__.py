@@ -261,36 +261,31 @@ def main(argv: list[str] | None = None) -> int:
         return 1 if n_bad else 0
 
     if args.cmd == "ingest-stream":
-        if args.gate == "lines":
-            from wsu_cpts_415_spark.streaming.line_gate import (
-                LINE_BP_THRESHOLD as JACCARD_THRESHOLD,
-            )
-            from wsu_cpts_415_spark.streaming.line_gate import (
-                init_line_store as init_standing_stores,
-            )
-            from wsu_cpts_415_spark.streaming.line_gate import (
-                stream_ingest_line_gate as stream_ingest_with_dedup,
-            )
-        else:
-            from wsu_cpts_415_spark.streaming.ingest_dedup import (
-                JACCARD_THRESHOLD,
-                init_standing_stores,
-                stream_ingest_with_dedup,
-            )
+        from wsu_cpts_415_spark.streaming import ingest_dedup, line_gate
 
+        init, run, default_threshold = {
+            "dedup": (
+                ingest_dedup.init_standing_stores,
+                ingest_dedup.stream_ingest_with_dedup,
+                ingest_dedup.JACCARD_THRESHOLD,
+            ),
+            "lines": (
+                line_gate.init_line_store,
+                line_gate.stream_ingest_line_gate,
+                line_gate.LINE_BP_THRESHOLD,
+            ),
+        }[args.gate]
         if args.init_corpus:
-            init_standing_stores(
-                spark, spark.read.parquet(args.init_corpus), args.store_dir
-            )
+            init(spark, spark.read.parquet(args.init_corpus), args.store_dir)
         stream = spark.readStream.schema(
             spark.read.parquet(args.incoming_dir).schema
         ).parquet(args.incoming_dir)
-        stream_ingest_with_dedup(
+        run(
             stream,
             args.store_dir,
             args.accepted_dir,
             args.checkpoint_dir,
-            threshold=JACCARD_THRESHOLD
+            threshold=default_threshold
             if args.threshold is None
             else args.threshold,
         )

@@ -16,7 +16,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.io.tables import load_table
@@ -125,10 +125,7 @@ def _h64_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wsu_cpts_415_spark.ops.staging import staged_table
 
     def build() -> DataFrame:
-        return _hashed_staged(spark, sf_dir).select(
-            "doc_id",
-            F.expr("transform(shingles, s -> xxhash64(s))").alias("h64"),
-        )
+        return _hashed_staged(spark, sf_dir).select("doc_id", shingle_h64())
 
     return staged_table(
         spark,
@@ -666,6 +663,13 @@ def binary_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.encode("text", "UTF-8")).cast("bigint").alias("n_bytes"),
         F.sha2(F.encode("text", "UTF-8"), 256).alias("payload_sha256"),
     ).orderBy("doc_id")
+
+
+def shingle_h64() -> Column:
+    """``h64``: the compact 64-bit hash array of a ``shingles`` column --
+    8 bytes per shingle, the row format of the staged ``shingle_h64``
+    layer and of the ingest gate's standing shingle store."""
+    return F.expr("transform(shingles, s -> xxhash64(s))").alias("h64")
 
 
 def hashed_of(docs: DataFrame) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from wsu_cpts_415_spark.io.tables import events_ts_read_plan
 from wsu_cpts_415_spark.schemas import EVENTS, EVENTS_RAW
+from wsu_cpts_415_spark.streaming import standing_store
 
 WATERMARK = "1 day"
 SESSION_GAP = "30 minutes"
@@ -184,9 +185,9 @@ def run_available_now(stream_df: DataFrame, name: str, output_mode: str = "compl
     batch cannot change the sink contents; it removes one full
     state-store commit + offset/commit-log round per query (measured
     -26% on the 5-shape phase probe, streaming_nodata_ab_r13.json).
-    A STANDING stream (the ingest/line gates use their own writeStream
-    paths) keeps the default: there, eager state cleanup between lulls
-    is the point."""
+    A STANDING stream (the foreachBatch sinks of
+    streaming/standing_store.py) keeps the default: there, eager state
+    cleanup between lulls is the point."""
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -214,55 +215,36 @@ def stream_to_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:
     """Streaming -> storage via foreachBatch: each micro-batch lands in
-    its own ``_batch_id=<n>`` partition via DYNAMIC partition overwrite,
-    so a batch replayed after a mid-batch failure overwrites its own
-    partition instead of appending a duplicate -- foreachBatch is
-    at-least-once, and idempotent-by-batch-id is what upgrades it to
-    exactly-once (a plain append would double-apply on replay; the
-    failure-injection test in tests/test_streaming.py proves the
-    difference).  This is the S9-sink analog for streams; swap the body
-    for MERGE INTO on a lakehouse table format."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    its own ``_batch_id=<n>`` partition, so a replayed batch rewrites it
+    instead of appending a duplicate (exactly-once argument:
+    streaming/standing_store.py; the failure-injection test in
+    tests/test_streaming.py proves the difference).  The S9-sink analog
+    for streams; swap the body for MERGE INTO on a lakehouse table
+    format."""
+    standing_store.run_stream(
+        stream_df,
+        lambda batch_df, batch_id: standing_store.write_batch(
+            batch_df, out_dir, batch_id, column="_batch_id"
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def apply_rollup_batch(
     batch_df: DataFrame, batch_id: int, events_dir: str, rollup_dir: str
 ) -> None:
     """Idempotent per-batch body of the rollup maintainer: land the batch
-    in its own ``_batch=<n>`` events-store partition (dynamic overwrite:
-    a replay rewrites the same partition, never duplicates it -- and
-    wipes any partial files a crashed write left there), then re-roll
-    only the days the batch touches from the FULL store.  Both steps are
-    replay-idempotent: the day recompute reads the store, so applying
-    the same batch twice converges to the same rollup rows."""
+    in its own ``_batch=<n>`` events-store partition
+    (standing_store.write_batch), then re-roll only the days the batch
+    touches from the FULL store.  Both steps are replay-idempotent: the
+    day recompute reads the store, so applying the same batch twice
+    converges to the same rollup rows."""
     from wsu_cpts_415_spark.io.maintenance import refresh_daily_rollup
 
     spark = batch_df.sparkSession
     batch_df.persist()
     try:
-        (
-            batch_df.withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(events_dir)
-        )
+        standing_store.write_batch(batch_df, events_dir, batch_id)
         refresh_daily_rollup(spark, events_dir, rollup_dir, batch_df)
     finally:
         batch_df.unpersist()
@@ -281,23 +263,16 @@ def stream_maintain_rollup(
     of the hypertable-rollup pattern -- state lives in the store, not
     the stream, and exactly-once comes from the idempotent-by-batch-id
     sink (apply_rollup_batch) under the checkpoint's replay bookkeeping.
-
-    ``on_batch_end(batch_id)`` fires after the sink body and BEFORE the
-    checkpoint commits the batch -- the failure-injection seam (raise
-    there to simulate dying mid-commit) and a metrics hook."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_rollup_batch(batch_df, batch_id, events_dir, rollup_dir)
-        if on_batch_end is not None:
-            on_batch_end(batch_id)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    ``on_batch_end(batch_id)`` is standing_store.run_stream's
+    failure-injection seam."""
+    standing_store.run_stream(
+        stream_df,
+        lambda batch_df, batch_id: apply_rollup_batch(
+            batch_df, batch_id, events_dir, rollup_dir
+        ),
+        checkpoint_dir,
+        on_batch_end,
     )
-    q.awaitTermination()
 
 
 def seasonal_alerts(

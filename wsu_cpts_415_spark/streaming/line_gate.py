@@ -11,12 +11,8 @@ accepted store and their per-line postings extend the standing
 line-frequency store, so batch N+1 gates against everything batch N
 admitted.
 
-Exactly-once: the same idempotent-by-batch-id discipline as the dedup
-gate -- every store write is partitioned by batch id via dynamic
-partition overwrite, the gate reads EXCLUDE the replaying batch's own
-partitions, and the zero-admitted replay path clears stale partitions
-explicitly (gate outcomes may change if the stream restarts with a
-different threshold against the same checkpoint).
+Exactly-once and restart-skip: streaming/standing_store.py (this
+module supplies only the gate core and the store-rows builder).
 
 Scale posture: the standing store holds (digest, n_docs) aggregates --
 8-byte xxhash64 digests, never line text -- so the per-batch gate cost
@@ -28,10 +24,13 @@ incremental refresh is the maintenance face).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wsu_cpts_415_spark.queries.llm_filters import BOILERPLATE_DF, LINE_TOKENS
+from wsu_cpts_415_spark.streaming import standing_store
 
 # reject a document when at least this fraction of its lines is boilerplate
 LINE_BP_THRESHOLD = 0.5
@@ -126,27 +125,19 @@ def gate_lines_against(
     )
 
 
-def gate_line_batch(
-    batch_df: DataFrame,
-    store_dir: str,
-    threshold: float = LINE_BP_THRESHOLD,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    """Gate ``batch_df`` against the standing line store, returning the
-    admitted document rows.  Missing store (first run, no bootstrap) ==
-    empty standing state; ``exclude_batch`` keeps replays deterministic
-    exactly as in ingest_dedup.gate_batch."""
-    from pyspark.errors import AnalysisException
+def _store_rows(
+    docs: DataFrame, persists: list | None = None
+) -> dict[str, DataFrame]:
+    return {"line_counts": doc_line_counts(docs)}
 
-    spark = batch_df.sparkSession
-    try:
-        std = spark.read.parquet(f"{store_dir}/line_counts")
-        if exclude_batch is not None:
-            std = std.filter(F.col("_batch") != exclude_batch)
-        std = std.drop("_batch")
-    except AnalysisException:  # store not created yet -> empty corpus
-        std = doc_line_counts(batch_df.limit(0))
-    verdicts = gate_lines_against(batch_df, std, threshold)
+
+def _admit(
+    batch_df: DataFrame,
+    standing: dict[str, DataFrame],
+    persists: list,
+    threshold: float,
+) -> DataFrame:
+    verdicts = gate_lines_against(batch_df, standing["line_counts"], threshold)
     return batch_df.join(
         verdicts.filter(F.col("admitted")).select("doc_id"), "doc_id"
     )
@@ -156,29 +147,10 @@ def init_line_store(
     spark: SparkSession, corpus_docs: DataFrame, store_dir: str
 ) -> None:
     """Bootstrap the standing line-frequency store from a corpus (the
-    nightly maintenance job's output); base data in _batch=-1.
-
-    Same restart-skip as ingest_dedup.init_standing_stores: a matching
-    ``_corpus_id`` marker makes re-init one corpus scan (and protects
-    the gate's appended ``_batch>=0`` partitions from the rebuild's
-    plain overwrite); marker written only after a successful build."""
-    from wsu_cpts_415_spark.streaming.ingest_dedup import (
-        _marker_path,
-        _read_marker,
-        corpus_fingerprint,
-    )
-
-    fp = corpus_fingerprint(corpus_docs)
-    if _read_marker(spark, store_dir, gate="line") == fp:
-        return
-    doc_line_counts(corpus_docs).withColumn("_batch", F.lit(-1)).write.mode(
-        "overwrite"
-    ).partitionBy("_batch").parquet(f"{store_dir}/line_counts")
-    spark.createDataFrame(
-        [(fp[0], fp[1])], "n_docs long, xor_hash long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        _marker_path(store_dir, gate="line")
-    )
+    nightly maintenance job's output) into its _batch=-1 partition; a
+    restart over the same corpus is one fingerprint scan
+    (standing_store.init_stores)."""
+    standing_store.init_stores(spark, corpus_docs, store_dir, "line", _store_rows)
 
 
 def apply_line_gate_batch(
@@ -189,49 +161,11 @@ def apply_line_gate_batch(
     threshold: float = LINE_BP_THRESHOLD,
 ) -> None:
     """Idempotent per-batch body: gate, land survivors, extend the line
-    store -- every write into a _batch=<id> partition via dynamic
-    overwrite.  Same write-then-derive ordering as the dedup gate: the
-    store append is derived from the LANDED accepted files so a lazy
-    re-execution of the gate plan cannot observe the batch's own store
-    rows."""
-    from wsu_cpts_415_spark.streaming.ingest_dedup import (
-        _drop_batch_partition,
+    store (standing_store.apply_batch)."""
+    standing_store.apply_batch(
+        batch_df, batch_id, store_dir, accepted_dir, _store_rows,
+        partial(_admit, threshold=threshold),
     )
-
-    spark = batch_df.sparkSession
-    batch_df.persist()
-    accepted = gate_line_batch(
-        batch_df, store_dir, threshold, exclude_batch=batch_id
-    ).persist()
-    try:
-        if accepted.limit(1).count() == 0:
-            for base in (accepted_dir, f"{store_dir}/line_counts"):
-                _drop_batch_partition(spark, base, batch_id)
-            return
-        opts = {"partitionOverwriteMode": "dynamic"}
-        (
-            accepted.withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**opts)
-            .partitionBy("_batch")
-            .parquet(accepted_dir)
-        )
-        landed = (
-            spark.read.parquet(accepted_dir)
-            .filter(F.col("_batch") == batch_id)
-            .drop("_batch")
-        )
-        (
-            doc_line_counts(landed)
-            .withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .options(**opts)
-            .partitionBy("_batch")
-            .parquet(f"{store_dir}/line_counts")
-        )
-    finally:
-        accepted.unpersist()
-        batch_df.unpersist()
 
 
 def stream_ingest_line_gate(
@@ -244,19 +178,12 @@ def stream_ingest_line_gate(
 ) -> None:
     """Run the boilerplate gate over a documents stream with
     trigger(availableNow); ``on_batch_end(batch_id)`` is the
-    failure-injection seam shared with the other foreachBatch jobs."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_line_gate_batch(
+    failure-injection seam of standing_store.run_stream."""
+    standing_store.run_stream(
+        stream_docs,
+        lambda batch_df, batch_id: apply_line_gate_batch(
             batch_df, batch_id, store_dir, accepted_dir, threshold
-        )
-        if on_batch_end is not None:
-            on_batch_end(batch_id)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
+        on_batch_end,
     )
-    q.awaitTermination()
